@@ -101,7 +101,6 @@ def main() -> None:
         with tempfile.TemporaryDirectory() as tmp:
             eng = CrawlEngine(
                 spark, tmp, pages, robots, host_budget=2000, bloom_buckets=16,
-                levels_per_commit=int(os.environ.get("SPARK_GRAFT_LEVELS", "2")),
             )
             eng.init_from_seeds(seeds)
             t0 = time.monotonic()

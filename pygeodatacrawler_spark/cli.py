@@ -230,20 +230,15 @@ def main(argv: list[str] | None = None) -> int:
             import pyspark.sql.functions as F
 
             from pygeodatacrawler_spark.plans.crawl import (
-                FRONTIER_SCHEMA,
                 RecordsView,
+                frontier_table,
             )
             from pygeodatacrawler_spark.sources.wet import (
                 write_wat,
                 write_wet,
             )
-            from pygeodatacrawler_spark.tables import SnapshotTable
 
-            ft = SnapshotTable(
-                spark, args.workdir, "frontier",
-                merge_log=True, key="url_hash", order_col="canon_url",
-                delta_partitions=None, read_schema=FRONTIER_SCHEMA,
-            )
+            ft = frontier_table(spark, args.workdir)
             # NOTE (documented divergence, round-6 advice): WARC-Date
             # here is EXPORT time, not fetch time — the records delta
             # does not persist a per-fetch wall timestamp (rounds are

@@ -1136,17 +1136,17 @@ def q_host_pagerank(spark, sf_dir):
     s = _table(spark, sf_dir, "supplier")
     n = _table(spark, sf_dir, "nation")
     cn = n.select(
-        F.col("n_nationkey").alias("c_nk"), F.col("n_name").alias("src")
+        F.col("n_nationkey").alias("cust_nation"), F.col("n_name").alias("src")
     )
     sn = n.select(
-        F.col("n_nationkey").alias("s_nk"), F.col("n_name").alias("dst")
+        F.col("n_nationkey").alias("supp_nation"), F.col("n_name").alias("dst")
     )
     edges = (
         li.join(o, li["l_orderkey"] == o["o_orderkey"])
         .join(c, o["o_custkey"] == c["c_custkey"])
-        .join(F.broadcast(cn), c["c_nationkey"] == F.col("c_nk"))
+        .join(F.broadcast(cn), c["c_nationkey"] == F.col("cust_nation"))
         .join(s, li["l_suppkey"] == s["s_suppkey"])
-        .join(F.broadcast(sn), s["s_nationkey"] == F.col("s_nk"))
+        .join(F.broadcast(sn), s["s_nationkey"] == F.col("supp_nation"))
         .filter(F.col("src") != F.col("dst"))
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("weight"))

@@ -1,10 +1,11 @@
 """Similarity search over embedding columns (array<float>).
 
 - brute-force cosine top-k: broadcast the (small) query set against the
-  corpus; dot products via zip_with/aggregate — stays JVM-side, no UDF.
-  At 100 TB the corpus side is the big side and never shuffles: the
-  broadcast join is a map-only stage, then one shuffle for the per-query
-  top-k window (or RANK <= k via AQE-coalesced partitions).
+  corpus; cosine is an Arrow-batched numpy kernel (a pandas UDF over the
+  joined vector pairs). At 100 TB the corpus side is the big side and
+  never shuffles: the broadcast join is a map-only stage, then one
+  shuffle for the per-query top-k window (or RANK <= k via
+  AQE-coalesced partitions).
 - LSH-bucketed ANN: random-hyperplane signs (deterministic planes from
   md5 of (plane, dim)) bucket the corpus once; queries probe only their
   bucket — the scale path that avoids scanning all vectors per query.

@@ -94,6 +94,24 @@ RECORD_SCHEMA = (
 )
 
 
+def frontier_table(spark: SparkSession, workdir: str) -> SnapshotTable:
+    """The crawl's frontier table under ``workdir``.
+
+    Merge-on-read: each round appends ONE delta carrying BOTH the
+    frontier flip rows (state) and the record payload (text/links/
+    latency) — the round's single write action. State resolves at read
+    time (last version wins per url_hash, over the narrow
+    FRONTIER_SCHEMA projection — payload columns are pruned at the
+    parquet scan) and compacts to a narrow base every compact_every
+    rounds; payload rows stay in their delta files forever (RecordsView
+    reads the delta log), so the commit cost is O(batch) and payload
+    bytes are written ONCE and never rewritten."""
+    return SnapshotTable(
+        spark, workdir, "frontier",
+        key="url_hash", order_col="canon_url", read_schema=FRONTIER_SCHEMA,
+    )
+
+
 class RecordsView:
     """The records 'table' as a read-side projection of the frontier
     table's delta log. A round's records ARE its frontier delta's
@@ -200,8 +218,7 @@ class CrawlEngine:
         salt_threshold: int = 1000,
         fetch_fn=None,
         bloom_min_frontier: int = 4_000_000,
-        levels_per_commit: int = 1,
-        fuse_min_batch: int = 20_000,
+        levels_per_commit: int = 1,  # accepted and ignored: one level per commit
         host_priority: DataFrame | None = None,
         trap_every: int | None = None,
         trap_min_urls: int = 100,
@@ -222,25 +239,12 @@ class CrawlEngine:
         self.host_budget = host_budget
         self.bloom_buckets = bloom_buckets
         self.salt_threshold = salt_threshold
-        # merge-on-read frontier: each round appends ONE delta carrying
-        # BOTH the frontier flip rows (state) and the record payload
-        # (text/links/latency) — the round's single write action.
-        # State resolves at read time (last version wins per url_hash,
-        # over the narrow FRONTIER_SCHEMA projection — payload columns
-        # are pruned at the parquet scan) and compacts to a narrow base
-        # every compact_every rounds; payload rows stay in their delta
-        # files forever (RecordsView reads the delta log), so the
-        # commit cost is O(batch) and payload bytes are written ONCE
-        # and never rewritten. delta_partitions=None: the delta rides
-        # the fetch+extract stage's natural partitioning (a coalesce
-        # here would propagate up and collapse the extract
-        # parallelism), and the per-file footer rows double as the
-        # lineage partition-balance metric with NO extra Spark action.
-        self.frontier = SnapshotTable(
-            spark, workdir, "frontier",
-            merge_log=True, key="url_hash", order_col="canon_url",
-            delta_partitions=None, read_schema=FRONTIER_SCHEMA,
-        )
+        # the round delta is written with the fetch+extract stage's
+        # natural partitioning (a coalesce here would propagate up and
+        # collapse the extract parallelism), and its per-file footer
+        # rows double as the lineage partition-balance metric with NO
+        # extra Spark action
+        self.frontier = frontier_table(spark, workdir)
         # the records log is a VIEW of the frontier delta log — same
         # files, zero extra writes
         self.records = RecordsView(self.frontier)
@@ -251,10 +255,6 @@ class CrawlEngine:
         # delta write and the lineage write) replays the round on
         # exactly the pre-round state
         self.lineage_path = os.path.join(workdir, "lineage.jsonl")
-        self.stats = CrawlStats()
-        # driver-side frontier-size counter: sizes the bloom without a
-        # count() action per round; re-derived from the snapshot on resume
-        self._n_frontier: int | None = None
         # below this, the exact anti-join is strictly cheaper than the
         # bloom machinery: url_hash keys are 8 B, so a 4M-key frontier
         # side is a ~32 MB broadcast (half the configured 64 MB
@@ -264,52 +264,6 @@ class CrawlEngine:
         # broadcastable and the bloom prunes the shuffle; a per-key-
         # size scale threshold, not a tuning knob.
         self.bloom_min_frontier = bloom_min_frontier
-        # incremental seen-bloom: rebuilt from the full frontier only
-        # when capacity is exceeded (amortized doubling); otherwise each
-        # round folds ONLY its frontier delta in with merge_blooms —
-        # O(batch) per round, never O(frontier). 10^10-scale argument:
-        # re-setting k bits per key for the whole frontier each round is
-        # an O(N·k)/round scan; the incremental fold touches only the
-        # round's new keys plus B bucket rows.
-        self._bloom: DataFrame | None = None
-        self._bloom_prev: DataFrame | None = None
-        self._bloom_geom: tuple[int, int] | None = None
-        self._bloom_capacity = 0
-        self._bloom_pending_delta: int | None = None
-        self._bloom_folds = 0
-        self._last_batch: int | None = None
-        # resolved-frontier cache, maintained INCREMENTALLY across
-        # rounds: applying the committed delta to the cached state
-        # (broadcast state-flip + O(batch) union) replaces re-running
-        # the merge-on-read resolve — a key-window over base+deltas,
-        # i.e. O(frontier) shuffle — every round. The disk table stays
-        # the source of truth (resume/reconcile drop the cache); the
-        # cache is refreshed from disk at every compaction, which both
-        # truncates the lineage chain (≤ compact_every levels deep, so
-        # an evicted cache recomputes through at most one compact cycle
-        # — DataFrame cache is MEMORY_AND_DISK, so at 10^10 rows the
-        # frontier spills rather than OOMs) and keeps the two in sync.
-        self._frontier_df: DataFrame | None = None
-        self._frontier_prev: DataFrame | None = None
-        # fused rounds: process N BFS levels per snapshot commit. The
-        # per-level pipeline is unchanged (level k+1's pending view is
-        # exactly what the frontier would contain after committing
-        # level k: (pending - batch_k) ∪ new_links_k), so records,
-        # visit ordering, and the final frontier are BYTE-IDENTICAL to
-        # N sequential single-level rounds — only the fixed per-commit
-        # floor (2 snapshot writes, lineage fsync, cache maintenance)
-        # is paid once per N levels instead of once per level. Resume
-        # granularity coarsens to N levels; reconcile() still replays
-        # a killed fused round deterministically from the last line.
-        self.levels_per_commit = max(1, levels_per_commit)
-        # fusing pays only when rounds are big: the fused DAG adds
-        # per-commit stages (level-k+1's window over the in-flight
-        # pending view, the new-links cache, chained anti-joins) whose
-        # scheduling cost exceeds a snapshot commit at small batches.
-        # Measured crossover on the bench box: ~1.5k-URL rounds run
-        # ~15% FASTER unfused, ~138k-URL waves ~20% faster fused — so
-        # fuse only once the previous batch shows the rounds are big.
-        self.fuse_min_batch = fuse_min_batch
         # rank-weighted budgets: (registered_domain, budget_factor),
         # e.g. linkrank.budget_factors_from_pagerank over a previous
         # crawl's host graph — broadcast into pick_batch
@@ -321,14 +275,62 @@ class CrawlEngine:
         self.trap_every = trap_every
         self.trap_min_urls = trap_min_urls
         self.trap_max_diversity = trap_max_diversity
+        # resolved-frontier cache, maintained INCREMENTALLY across
+        # rounds: applying the committed delta to the cached state
+        # (broadcast state-flip + O(batch) union) replaces re-running
+        # the merge-on-read resolve — a key-window over base+deltas,
+        # i.e. O(frontier) shuffle — every round. The disk table stays
+        # the source of truth (resume/reconcile drop the cache); the
+        # cache is refreshed from disk at every compaction, which both
+        # truncates the lineage chain (≤ compact_every rounds deep, so
+        # an evicted cache recomputes through at most one compact cycle
+        # — DataFrame cache is MEMORY_AND_DISK, so at 10^10 rows the
+        # frontier spills rather than OOMs) and keeps the two in sync.
+        self._frontier_df: DataFrame | None = None
+        self._frontier_prev: DataFrame | None = None
+        self._bloom: DataFrame | None = None
+        self._bloom_prev: DataFrame | None = None
+        self._reset_crawl_state()
+
+    def _reset_crawl_state(self) -> None:
+        """Drop every driver-side value derived from the crawl on disk
+        (all of it is rebuilt lazily from the committed tables): a new
+        engine starts here, and so does a re-seeded one."""
+        self._drop_frontier_cache()
+        for df in (self._bloom, self._bloom_prev):
+            if df is not None:
+                df.unpersist()
+        self.stats = CrawlStats()
+        # driver-side frontier-size counter: sizes the bloom without a
+        # count() action per round; re-derived from the snapshot on resume
+        self._n_frontier: int | None = None
+        # incremental seen-bloom: rebuilt from the full frontier only
+        # when capacity is exceeded (amortized doubling); otherwise each
+        # round folds ONLY its frontier delta in with merge_blooms —
+        # O(batch) per round, never O(frontier). 10^10-scale argument:
+        # re-setting k bits per key for the whole frontier each round is
+        # an O(N·k)/round scan; the incremental fold touches only the
+        # round's new keys plus B bucket rows.
+        self._bloom = None
+        self._bloom_prev = None
+        self._bloom_geom: tuple[int, int] | None = None
+        self._bloom_capacity = 0
+        self._bloom_pending_delta: int | None = None
+        self._bloom_folds = 0
+        self._last_batch: int | None = None
         self._trap_templates: list[str] | None = None
         self._traps_boundary = -1
 
     # -- bootstrap ---------------------------------------------------------
     def init_from_seeds(self, seeds: DataFrame) -> None:
-        """seeds(url, depth) -> frontier v1 (all pending, round 0)."""
+        """seeds(url, depth) -> frontier v1 (all pending, round 0).
+        Re-seeding a used workdir starts a new crawl: the old frontier,
+        lineage and per-crawl state are discarded."""
         self.frontier.rollback(0)
-        self._drop_frontier_cache()
+        # truncate before the new snapshot exists: the old lineage would
+        # otherwise make resume_round() continue the old numbering
+        open(self.lineage_path, "w").close()
+        self._reset_crawl_state()
         v = self.frontier.write_snapshot(seeds_to_frontier(seeds))
         self._n_frontier = self.frontier.read().count()
         self.commit_external(frontier_v=v)
@@ -348,7 +350,8 @@ class CrawlEngine:
 
     def resume_round(self) -> int:
         """Next round number implied by committed lineage (for resume).
-        A fused line covering N levels advances the counter by N."""
+        Lineage written by earlier versions may carry ``levels`` (BFS
+        levels fused into one commit); such a line advances by that."""
         nxt = [
             l["round"] + l.get("levels", 1)
             for l in self._read_lineage()
@@ -427,10 +430,9 @@ class CrawlEngine:
 
         The branch structure is EXHAUSTIVE: any state that is not
         provably fold-able (no bloom, outgrown capacity, or no pending
-        delta recorded — the last happens after a COW-fallback frontier
-        write, where last_delta_version is None) falls into a full
-        rebuild. A silent stale-bloom return would turn bloom false
-        negatives into re-fetches of seen URLs.
+        delta recorded — a fresh, resumed or re-seeded engine) falls
+        into a full rebuild. A silent stale-bloom return would turn
+        bloom false negatives into re-fetches of seen URLs.
 
         Every 8th fold localCheckpoints the merged bloom instead of
         caching it: each fold adds a merge + delta-scan layer to the
@@ -480,9 +482,9 @@ class CrawlEngine:
         return self._bloom
 
     # -- one round ---------------------------------------------------------
-    def _pick_level_batch(self, pending: DataFrame) -> DataFrame:
-        """One level's fetch batch: politeness + priority + salt +
-        fetch-width repartition (cached — one per level)."""
+    def _round_batch(self, pending: DataFrame) -> DataFrame:
+        """The round's fetch batch: politeness + priority + salt +
+        fetch-width repartition (cached)."""
         # pick_batch caps every host at host_budget rows, so no host can
         # exceed the heavy threshold unless the budget itself does — a
         # driver-side check that skips the salt window entirely in the
@@ -504,10 +506,9 @@ class CrawlEngine:
         batch = repartition_for_fetch(
             batch, est_rows=self._last_batch or self._n_frontier
         )
-        extra = ["_new"] if "_new" in batch.columns else []
-        return batch.select(*FRONTIER_COLS, "host_rank", "salt", *extra).cache()
+        return batch.select(*FRONTIER_COLS, "host_rank", "salt").cache()
 
-    def _level_records(self, batch: DataFrame, round_no: int) -> DataFrame:
+    def _round_records(self, batch: DataFrame, round_no: int) -> DataFrame:
         # fetch (HTTP stand-in): probe the pages store with the batch keys.
         # The batch side is tiny (hosts x budget keys) -> broadcast it and
         # INNER-join so the big pages side is a map-only scan-probe (no
@@ -516,13 +517,11 @@ class CrawlEngine:
         # (the 404 analog). Extraction runs directly on the probe output,
         # so html bytes die in the same stage they were read.
         #
-        # url / discovery_ts / _new ride along: the unified round commit
+        # url / discovery_ts ride along: the unified round commit
         # turns these record rows directly into the frontier delta's
         # state='fetched' rows (no join back to the batch).
         id_cols = ["url_hash", "url", "canon_url", "registered_domain",
                    "depth", "discovery_ts"]
-        if "_new" in batch.columns:
-            id_cols.append("_new")
         if self.fetch_fn is not None:
             # per-URL fetch (production shape), FUSED with extraction in
             # one map-only UDF over the batch: fetch -> extract -> record
@@ -563,16 +562,12 @@ class CrawlEngine:
                     out["n_bytes"] = aligned["n_bytes"].astype("Int64").values
                     yield out
 
-            id_schema = (
-                "url_hash long, url string, canon_url string, "
-                "registered_domain string, depth int, discovery_ts long"
-                + (", _new int" if "_new" in id_cols else "")
-            )
             records = batch.select(*id_cols).mapInPandas(
                 _fetch_extract,
                 schema=(
-                    id_schema
-                    + ", text string, links array<string>, n_bytes long"
+                    "url_hash long, url string, canon_url string, "
+                    "registered_domain string, depth int, discovery_ts long, "
+                    "text string, links array<string>, n_bytes long"
                 ),
             )
         else:
@@ -591,20 +586,16 @@ class CrawlEngine:
             )
         return records.withColumn("round", F.lit(round_no))
 
-    def _level_new_links(
+    def _round_new_links(
         self,
         records: DataFrame,
         round_no: int,
         frontier: DataFrame,
         bloom: DataFrame | None,
-        prior_new_links: list[DataFrame],
     ) -> DataFrame:
-        """Expand one level's records into seen-filtered new frontier
-        rows. ``bloom`` is the round's shared seen-bloom (None below
-        the exact-anti-join threshold); ``prior_new_links`` are the
-        same fused round's earlier levels' discoveries — committed
-        state in a sequential run, in-flight DataFrames here — which
-        the exact anti-join chain below treats identically."""
+        """Expand the round's records into seen-filtered new frontier
+        rows. ``bloom`` is the round's seen-bloom (None below the
+        exact-anti-join threshold)."""
         links = (
             records.select("depth", F.explode_outer("links").alias("link"))
             .filter(F.col("link").isNotNull())
@@ -652,10 +643,6 @@ class CrawlEngine:
         else:
             new_links = links.join(
                 frontier.select("url_hash"), "url_hash", "left_anti"
-            )
-        for prior in prior_new_links:
-            new_links = new_links.join(
-                prior.select("url_hash"), "url_hash", "left_anti"
             )
         return new_links
 
@@ -739,7 +726,7 @@ class CrawlEngine:
         """Trap-template table in force at ``round_no``: recomputed
         from records with round < the last trap_every boundary — a
         pure function of COMMITTED state (records rows carry their
-        level's round), so an interrupted-and-resumed crawl derives
+        round), so an interrupted-and-resumed crawl derives
         exactly the tables an uninterrupted one does. The collected
         template list is O(#templates) (the explosion asymmetry is the
         signal: few templates, many URLs)."""
@@ -770,9 +757,9 @@ class CrawlEngine:
         )
 
     def run_round(self, round_no: int) -> dict:
-        """One committed crawl round: ``levels_per_commit`` BFS levels
-        through pick -> fetch+extract -> expand -> seen-filter, then ONE
-        records append + ONE frontier merge + ONE lineage line."""
+        """One committed crawl round: one BFS level through pick ->
+        fetch+extract -> expand -> seen-filter, then ONE unified delta
+        write + ONE lineage line."""
         t0 = time.monotonic()
         if self._frontier_df is None:  # fresh engine / post-reconcile
             self._frontier_df = self.frontier.read().cache()
@@ -788,61 +775,18 @@ class CrawlEngine:
 
             pending = apply_trap_filter(pending, traps, url_col="canon_url")
 
-        levels = self.levels_per_commit
-        if levels > 1 and (self._last_batch or 0) < self.fuse_min_batch:
-            levels = 1  # small-round regime: fusing costs more than it saves
-        if levels > 1:
-            # origin tag for the new-key Observation on the delta write:
-            # rows already in the committed frontier carry 0; this fused
-            # round's in-flight discoveries carry 1
-            pending = pending.withColumn("_new", F.lit(0))
         use_bloom = self._n_frontier >= self.bloom_min_frontier
         bloom = self._current_bloom(frontier) if use_bloom else None
-        batches: list[DataFrame] = []
-        records_parts: list[DataFrame] = []
-        new_links_parts: list[DataFrame] = []
-        tmp_caches: list[DataFrame] = []
-        for li in range(levels):
-            rno = round_no + li
-            batch = self._pick_level_batch(pending)
-            batches.append(batch)
-            rec = self._level_records(batch, rno)
-            # cache EVERY level's records: inside the unified commit
-            # the fetch+extract UDF subtree is referenced by TWO
-            # branches of the single write job — the fetched delta rows
-            # and this level's expand (whose dedup shuffle-map stage
-            # runs first by dependency order and populates the cache) —
-            # so the UDF runs exactly once and no URL is ever fetched
-            # twice
-            rec = rec.cache()
-            tmp_caches.append(rec)
-            records_parts.append(rec)
-            new_links = self._level_new_links(
-                rec, rno, frontier, bloom, new_links_parts
-            )
-            if li < levels - 1:
-                # cache: the append job materializes this level's
-                # expand->dedup->seen pipeline (level k+1's pick_batch
-                # consumes it); without the cache the frontier-delta
-                # write would re-run the whole expand for this level
-                new_links = new_links.cache()
-                tmp_caches.append(new_links)
-            new_links_parts.append(new_links)
-            if li < levels - 1:
-                # next level's pending view == the frontier's pending
-                # rows had this level been committed (exact parity)
-                pending = pending.join(
-                    batch.select("url_hash"), "url_hash", "left_anti"
-                ).unionByName(
-                    new_links.select(*FRONTIER_COLS).withColumn(
-                        "_new", F.lit(1)
-                    )
-                )
-
-        records = records_parts[0]
-        for part in records_parts[1:]:
-            records = records.unionByName(part)
-        records = (
+        batch = self._round_batch(pending)
+        # cache the records: inside the unified commit the fetch+extract
+        # UDF subtree is referenced by TWO branches of the single write
+        # job — the fetched delta rows and the expand (whose dedup
+        # shuffle-map stage runs first by dependency order and populates
+        # the cache) — so the UDF runs exactly once and no URL is ever
+        # fetched twice
+        records = self._round_records(batch, round_no).cache()
+        new_links = self._round_new_links(records, round_no, frontier, bloom)
+        records_out = (
             records.withColumn("text_sha2", F.sha2(F.coalesce(F.col("text"), F.lit("")), 256))
             # fetch latency: with a real HTTP fetch the mapInPandas UDF
             # stamps measured wall-ms per URL; the stand-in derives a
@@ -863,34 +807,29 @@ class CrawlEngine:
         )
 
         # THE round commit: ONE unified delta = record rows
-        # (state='fetched', carrying the extraction payload) + each
-        # level's surviving new links (state='pending', payload null) —
-        # one write action per committed round runs the whole pipeline
-        # (pick -> fetch+extract -> expand -> seen filter) and writes
-        # frontier flip + records payload into the same files. Delta
-        # rows are one per key (disjoint by construction): keys
-        # discovered AND fetched inside one fused round appear once, as
-        # fetched. The previous shape (separate records append +
+        # (state='fetched', carrying the extraction payload) + the
+        # surviving new links (state='pending', payload null) — one
+        # write action per round runs the whole pipeline (pick ->
+        # fetch+extract -> expand -> seen filter) and writes frontier
+        # flip + records payload into the same files. Delta rows are
+        # one per key: new links passed the seen filter, so none is in
+        # the batch. The previous shape (separate records append +
         # frontier merge) paid a second job that re-ran the expand
         # pipeline from cache — measured at ~1/3 of the small-round
         # loop wall.
-        nk = F.col("_new") if "_new" in records.columns else F.lit(0)
         rec_only = ["round", "text", "text_sha2", "links", "n_bytes", "fetch_ms"]
-        delta_in = records.withColumn("state", F.lit("fetched")).withColumn(
-            "_nk", nk
-        ).select(*FRONTIER_COLS, *rec_only, "_nk")
-        for j, nl in enumerate(new_links_parts):
-            rows = nl
-            for later in batches[j + 1 :]:
-                rows = rows.join(later.select("url_hash"), "url_hash", "left_anti")
-            delta_in = delta_in.unionByName(
-                rows.select(*FRONTIER_COLS).withColumn("_nk", F.lit(1)),
+        delta_in = (
+            records_out.withColumn("state", F.lit("fetched"))
+            .select(*FRONTIER_COLS, *rec_only)
+            .unionByName(
+                new_links.select(*FRONTIER_COLS),
                 allowMissingColumns=True,  # payload cols -> null
             )
+        )
         # round metrics ride an Observation on the single write action
         # — batch size, fetch-latency histogram (pending rows carry
-        # null fetch_ms and fall out of every count), new-key total,
-        # and the trailing-empty-level check; zero extra jobs
+        # null fetch_ms and fall out of every count) and new-key total;
+        # zero extra jobs
         obs = Observation(f"commit-r{round_no}")
         fetched = F.col("state") == "fetched"
         delta_in = delta_in.observe(
@@ -905,24 +844,19 @@ class CrawlEngine:
             ).alias("lat_500"),
             F.count(F.when(F.col("fetch_ms") >= 500, 1)).alias("lat_inf"),
             F.round(F.avg("fetch_ms"), 2).alias("lat_mean"),
-            F.max("round").alias("max_round"),
-            F.sum("_nk").alias("n_new"),
-        ).select(*FRONTIER_COLS, *rec_only)
+            F.count(F.when(F.col("state") == "pending", 1)).alias("n_new"),
+        )
         prev_frontier_v = self.frontier.latest_version() or 0
-        frontier_v = self.frontier.merge_upsert(delta_in, current=frontier)
+        frontier_v = self.frontier.merge_upsert(delta_in)
         delta_v = self.frontier.last_delta_version
         metrics = obs.get  # materialized by the write action
         n_batch = int(metrics["n_batch"] or 0)
         if n_batch == 0:
             # nothing pending: drop the empty version(s), converged
             self.frontier.rollback(prev_frontier_v)
-            for df in batches + tmp_caches:
-                df.unpersist()
-            return {
-                "round": round_no, "rows_in": 0, "rows_out": 0,
-                "levels": levels, "done": True,
-            }
-        n_records = n_batch
+            batch.unpersist()
+            records.unpersist()
+            return {"round": round_no, "rows_in": 0, "rows_out": 0, "done": True}
         self._last_batch = n_batch
         # partition balance of the round's single write, straight from
         # the delta version's parquet footers (no Spark job). Includes
@@ -944,14 +878,13 @@ class CrawlEngine:
         # its files (not from `batch`) keeps the next frontier's lineage
         # anchored on disk, so an evicted cache replays a cheap scan
         # instead of the whole fetch pipeline.
-        compacted = delta_v is None or frontier_v != delta_v
         if self._frontier_prev is not None:
             self._frontier_prev.unpersist()
-        if compacted:
-            # compaction (or COW fallback) wrote a full base snapshot:
-            # refresh from disk — a single-version scan with no resolve
-            # window — which also truncates the cache's lineage chain
-            self._frontier_prev = self._frontier_df
+        self._frontier_prev = self._frontier_df
+        if frontier_v != delta_v:
+            # compaction wrote a full base snapshot: refresh from disk —
+            # a single-version scan with no resolve window — which also
+            # truncates the cache's lineage chain
             self._frontier_df = self.frontier.read().cache()
         else:
             delta = self.frontier.read_version_only(delta_v)
@@ -968,25 +901,16 @@ class CrawlEngine:
             if n_batch <= self.bloom_min_frontier:
                 flips = F.broadcast(flips)
             kept = frontier.join(flips, "url_hash", "left_anti")
-            self._frontier_prev = self._frontier_df
             self._frontier_df = kept.unionByName(
                 delta.select(*FRONTIER_COLS)
             ).cache()
 
-        # levels that actually produced records (trailing empty level
-        # at convergence is not counted as a crawled BFS level)
-        levels_done = (
-            int(metrics["max_round"]) - round_no + 1
-            if metrics["max_round"] is not None
-            else levels
-        )
         wall = time.monotonic() - t0
         line = {
             "round": round_no,
-            "levels": levels_done,
             "rows_in": n_batch,
             "rows_out": n_new,
-            "n_records": n_records,
+            "n_records": n_batch,
             "n_parts": n_parts,
             "skew": float(skew),
             "wall_s": wall,
@@ -1011,9 +935,9 @@ class CrawlEngine:
             "records_v": frontier_v,
         }
         self._append_lineage(line)
-        for df in batches + tmp_caches:
-            df.unpersist()
-        self.stats.rounds += levels_done
+        batch.unpersist()
+        records.unpersist()
+        self.stats.rounds += 1
         self.stats.urls_fetched += n_batch
         self.stats.urls_discovered += n_new
         self.stats.lineage.append(line)
@@ -1045,5 +969,5 @@ class CrawlEngine:
             res = self.run_round(r)
             if res.get("done") or res["rows_in"] == 0:
                 break
-            r += res.get("levels", 1)
+            r += 1
         return self.stats

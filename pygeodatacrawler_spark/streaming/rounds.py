@@ -52,18 +52,16 @@ def seed_ingest_stream(
         if engine.frontier.exists():
             # existing rows win (seen-set semantics for re-submitted
             # seeds): the anti-join keeps only never-seen keys, so the
-            # O(batch) merge-on-read delta append is equivalent to the
-            # old full-snapshot rewrite — which was O(frontier) per
-            # micro-batch, the one write in the system that still
-            # scaled with table size. The engine's warm cache stands in
-            # for the disk read when available (same state, no resolve).
+            # O(batch) merge-on-read delta append never overwrites a
+            # row. The engine's warm cache stands in for the disk read
+            # when available (same state, no resolve).
             cur = (
                 engine._frontier_df
                 if engine._frontier_df is not None
                 else engine.frontier.read()
             )
             fresh = rows.join(cur.select("url_hash"), "url_hash", "left_anti")
-            v = engine.frontier.merge_upsert(fresh, current=cur)
+            v = engine.frontier.merge_upsert(fresh)
         else:
             v = engine.frontier.write_snapshot(rows)
         engine._n_frontier = None  # recount lazily next round

@@ -14,21 +14,14 @@ corrupts the latest committed snapshot — the property the north rule
 needs for deterministic resume. Swapping this class for Iceberg is a
 one-file change (the CrawlEngine only calls read/write/merge_upsert).
 
-Three storage modes (mirroring Iceberg's write strategies):
-
-- default            — each version is the full table state
-                       (copy-on-write; fine for small dims).
-- ``log=True``       — each version is an append-only delta;
-                       ``read()`` unions committed versions (records).
-- ``merge_log=True`` — MERGE-ON-READ: ``merge_upsert`` appends the
-                       batch as a delta (O(batch) write, not O(table));
-                       ``read()`` resolves last-writer-wins per key
-                       with one window over base+deltas; a full base
-                       snapshot is compacted every ``compact_every``
-                       deltas to bound read cost. This is the frontier
-                       mode — the round commit cost no longer grows
-                       with frontier size, the property that makes
-                       rounds O(batch) at a 10^10-row frontier.
+One storage mode, MERGE-ON-READ (Iceberg's merge-on-read write
+strategy): ``write_snapshot`` writes a full base; ``merge_upsert``
+appends the batch as a delta (O(batch) write, not O(table));
+``read()`` resolves last-writer-wins per key with one window over the
+last base and the deltas after it; a full base snapshot is compacted
+every ``compact_every`` deltas to bound read cost. The round commit
+cost therefore does not grow with table size, the property that makes
+crawl rounds O(batch) at a 10^10-row frontier.
 """
 
 from __future__ import annotations
@@ -42,32 +35,26 @@ import pyspark.sql.functions as F
 
 
 class SnapshotTable:
+    # deltas appended between full base snapshots
+    compact_every = 10
+
     def __init__(
         self,
         spark: SparkSession,
         root: str,
         name: str,
-        log: bool = False,
-        merge_log: bool = False,
-        key: str | None = None,
+        key: str,
         order_col: str | None = None,
-        compact_every: int = 10,
-        delta_partitions: int | None = 8,
         read_schema: str | None = None,
     ):
-        if merge_log and key is None:
-            raise ValueError("merge_log tables need a key column")
         self.spark = spark
-        self.log = log
-        self.merge_log = merge_log
         self.key = key
+        # tie-break among a key's rows inside ONE version
         self.order_col = order_col
-        self.compact_every = compact_every
-        self.delta_partitions = delta_partitions
-        # explicit read-side schema for merge-log resolution: versions
-        # may be SCHEMA-HETEROGENEOUS (a delta can carry payload columns
-        # beyond the table's logical state — the crawl engine's unified
-        # round commit writes record payloads into the frontier delta);
+        # explicit read-side schema for resolution: versions may be
+        # SCHEMA-HETEROGENEOUS (a delta can carry payload columns beyond
+        # the table's logical state — the crawl engine's unified round
+        # commit writes record payloads into the frontier delta);
         # pinning the schema makes every resolve a projection of these
         # columns (parquet prunes the rest: payload bytes are never read
         # by frontier resolution) and makes bases/deltas union-safe.
@@ -83,7 +70,7 @@ class SnapshotTable:
             return {"versions": [], "bases": []}
         with open(self.meta_path) as f:
             m = json.load(f)
-        m.setdefault("bases", list(m["versions"]) if not self.log else [])
+        m.setdefault("bases", list(m["versions"]))
         return m
 
     def _versions(self) -> list[int]:
@@ -126,12 +113,7 @@ class SnapshotTable:
         v = self.latest_version() if version is None else version
         if v is None:
             raise FileNotFoundError(f"snapshot table {self.dir} has no snapshots")
-        if self.log:
-            dirs = [self._vdir(x) for x in self._versions() if x <= v]
-            return self.spark.read.parquet(*dirs)
-        if self.merge_log:
-            return self._resolve(v)
-        return self.spark.read.parquet(self._vdir(v))
+        return self._resolve(v)
 
     def _resolve(self, v: int) -> DataFrame:
         """Merge-on-read state at version ``v``: union the last base
@@ -150,7 +132,7 @@ class SnapshotTable:
         resolved-frontier cache incrementally (apply-delta on the cached
         state) and only comes back here on resume and right after
         compaction, when a single base version makes this a plain scan
-        (the len(vs)==1 fast path above)."""
+        (the len(vs)==1 fast path below)."""
         m = self._meta()
         bases = [b for b in m["bases"] if b <= v]
         base = bases[-1] if bases else None
@@ -176,85 +158,32 @@ class SnapshotTable:
 
     def write_snapshot(self, df: DataFrame, base: bool = True) -> int:
         """Write a new immutable version; returns it. ``base=False``
-        marks a merge_log delta (not a full state)."""
+        marks a delta (not a full state)."""
         m = self._meta()
         versions = m["versions"]
         v = (versions[-1] + 1) if versions else 1
         df.write.mode("overwrite").parquet(self._vdir(v))
-        bases = m["bases"] + ([v] if base and not self.log else [])
-        self._commit(versions + [v], bases)
+        self._commit(versions + [v], m["bases"] + ([v] if base else []))
         return v
 
-    def merge_upsert(
-        self,
-        batch: DataFrame,
-        key: str | None = None,
-        order_col: str | None = None,
-        current: DataFrame | None = None,
-    ) -> int:
+    def merge_upsert(self, batch: DataFrame) -> int:
         """MERGE INTO semantics: batch rows win on key collision.
 
-        merge_log mode: append the batch as a delta — O(batch) write;
-        collisions resolve at read time (last version wins). A base
-        snapshot is compacted every ``compact_every`` deltas so reads
-        stay bounded. Otherwise: copy-on-write union + keep-one-per-key
-        (the Iceberg WHEN MATCHED UPDATE / NOT MATCHED INSERT shape).
-        """
-        key = key or self.key
-        order_col = order_col or self.order_col
-        self.last_delta_version = None  # set only by the delta path below
-        if self.merge_log and self.exists():
-            # deltas are small (O(batch)); without coalesce each delta
-            # inherits the upstream shuffle partitioning (~3x cores
-            # files), and a 10-delta read drags ~1000 tiny files.
-            # delta_partitions=None keeps the natural partitioning —
-            # REQUIRED when the delta rides the output of a map-heavy
-            # stage (coalesce would propagate up and collapse that
-            # stage's parallelism) and the per-file rows double as the
-            # caller's partition-balance metric
-            if self.delta_partitions:
-                batch = batch.coalesce(self.delta_partitions)
-            v = self.write_snapshot(batch, base=False)
-            # callers derive per-round counts from this delta's footers
-            self.last_delta_version = v
-            m = self._meta()
-            last_base = m["bases"][-1] if m["bases"] else 0
-            n_deltas = len([x for x in m["versions"] if x > last_base])
-            if n_deltas >= self.compact_every:
-                v = self.write_snapshot(self._resolve(v))
-            return v
-        if current is not None:
-            cur = current.withColumn("_src", F.lit(0))
-        elif self.exists():
-            cur = self.read().withColumn("_src", F.lit(0))
-        else:
-            cur = None
-        b = batch.withColumn("_src", F.lit(1))
-        allrows = b if cur is None else cur.unionByName(b)
-        order = [F.col("_src").desc()]
-        if order_col is not None:
-            order.append(F.col(order_col))
-        w = Window.partitionBy(key).orderBy(*order)
-        merged = (
-            allrows.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn", "_src")
-        )
-        return self.write_snapshot(merged)
-
-    def append(self, batch: DataFrame) -> int:
-        if self.log:
-            # log appends are O(batch): when delta_partitions is set,
-            # keep the file count per version small so log reads don't
-            # drag thousands of tiny files; None preserves the natural
-            # partitioning (per-file footer rows then ARE the stage's
-            # partition balance — the lineage skew metric)
-            if self.delta_partitions:
-                batch = batch.coalesce(self.delta_partitions)
-            return self.write_snapshot(batch)
+        Appends the batch as a delta — O(batch) write, written with the
+        batch's own partitioning (callers read per-file footer rows of
+        ``last_delta_version`` as the write's partition balance);
+        collisions resolve at read time (last version wins). Every
+        ``compact_every`` deltas a base snapshot is compacted so reads
+        stay bounded; the returned version is then that base."""
         if not self.exists():
-            return self.write_snapshot(batch)
-        return self.write_snapshot(self.read().unionByName(batch))
+            raise FileNotFoundError(f"snapshot table {self.dir} has no snapshots")
+        v = self.write_snapshot(batch, base=False)
+        self.last_delta_version = v
+        m = self._meta()
+        n_deltas = len([x for x in m["versions"] if x > m["bases"][-1]])
+        if n_deltas >= self.compact_every:
+            v = self.write_snapshot(self._resolve(v))
+        return v
 
     def version_file_rows(self, version: int) -> list[int]:
         """Per-file row counts of one version from parquet footers —
@@ -271,20 +200,16 @@ class SnapshotTable:
             )
         ]
 
-    def version_rows(self, version: int) -> int:
-        """Total row count of one version (footers; no Spark job)."""
-        return sum(self.version_file_rows(version))
-
     def read_version_only(self, version: int) -> DataFrame:
-        """Scan exactly one version's files (no log union, no
-        last-wins resolve) — e.g. one round's delta rows."""
+        """Scan exactly one version's files (no last-wins resolve) —
+        e.g. one round's delta rows."""
         return self.spark.read.parquet(self._vdir(version))
 
     def read_delta_log(self, schema: str) -> DataFrame:
         """Union of every committed NON-BASE version, one multi-path
         scan with an explicit schema (versions may be heterogeneous —
         columns absent from a file read as null). This is the append-
-        log VIEW of a merge_log table: compaction bases are last-wins
+        log VIEW of the table: compaction bases are last-wins
         RESOLUTIONS of the log and are excluded, so rows appended by a
         delta are visible here forever and are never rewritten."""
         m = self._meta()
@@ -293,7 +218,3 @@ class SnapshotTable:
         if not dirs:
             return self.spark.createDataFrame([], schema)
         return self.spark.read.schema(schema).parquet(*dirs)
-
-    def drop(self) -> None:
-        shutil.rmtree(self.dir, ignore_errors=True)
-        os.makedirs(self.dir, exist_ok=True)

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import tempfile
 
+import pytest
+
 from pygeodatacrawler_spark.fixtures import load_pages
 from pygeodatacrawler_spark.plans.crawl import CrawlEngine
 
@@ -14,38 +16,78 @@ N_HOSTS = 6
 BUDGET = 20
 
 
-def _final_state(spark, pages, seeds, robots, interrupt: bool):
+def _final_state(spark, pages, seeds, robots, interrupt: bool, resume_levels=1):
+    """Final (visits, frontier, records) and committed lineage rounds."""
     with tempfile.TemporaryDirectory() as tmp:
         eng = CrawlEngine(spark, tmp, pages, robots, host_budget=BUDGET)
         eng.init_from_seeds(seeds)
         if interrupt:
             eng.run(max_rounds=2)  # "killed" after 2 committed rounds
-            eng2 = CrawlEngine(spark, tmp, pages, robots, host_budget=BUDGET)
+            eng2 = CrawlEngine(
+                spark, tmp, pages, robots, host_budget=BUDGET,
+                levels_per_commit=resume_levels,
+            )
             eng2.run(max_rounds=50)
             final = eng2
         else:
             eng.run(max_rounds=50)
             final = eng
-        vis = sorted(
-            (r["round"], r["rank_in_round"], r["canon_url"])
-            for r in final.visits_view().collect()
-        )
-        fro = sorted(
-            (r["url_hash"], r["state"]) for r in final.frontier.read().collect()
-        )
-        rec = sorted(
-            (r["canon_url"], r["text_sha2"]) for r in final.records.read().collect()
-        )
-        return vis, fro, rec
+        return _collect_state(final), _lineage_rounds(final)
 
 
-def test_resume_is_deterministic(spark):
-    pages, seeds, robots = load_pages(spark, n_pages=N_PAGES, n_hosts=N_HOSTS)
-    full = _final_state(spark, pages, seeds, robots, interrupt=False)
-    resumed = _final_state(spark, pages, seeds, robots, interrupt=True)
-    assert full[0] == resumed[0]  # visit order
-    assert full[1] == resumed[1]  # frontier states
-    assert full[2] == resumed[2]  # records + text hashes
+def _lineage_rounds(eng):
+    return [l["round"] for l in eng._read_lineage() if l["round"] >= 0]
+
+
+@pytest.fixture(scope="module")
+def inputs(spark):
+    return load_pages(spark, n_pages=N_PAGES, n_hosts=N_HOSTS)
+
+
+@pytest.fixture(scope="module")
+def full(spark, inputs):
+    return _final_state(spark, *inputs, interrupt=False)
+
+
+def test_resume_is_deterministic(spark, inputs, full):
+    # levels_per_commit=2 is what older callers pass; it is accepted and
+    # ignored, so a resumed crawl still commits one round per line
+    for levels in (1, 2):
+        resumed, rounds = _final_state(
+            spark, *inputs, interrupt=True, resume_levels=levels
+        )
+        assert full[0][0] == resumed[0], levels  # visit order
+        assert full[0][1] == resumed[1], levels  # frontier states
+        assert full[0][2] == resumed[2], levels  # records + text hashes
+        assert rounds == list(range(len(rounds))), levels
+
+
+def test_reseed_restarts_crawl(spark, inputs, full):
+    """Re-seeding a used workdir starts a new crawl from round 0: its
+    tables equal a crawl in a fresh workdir."""
+    pages, seeds, robots = inputs
+    with tempfile.TemporaryDirectory() as tmp:
+        eng = CrawlEngine(spark, tmp, pages, robots, host_budget=BUDGET)
+        eng.init_from_seeds(seeds)
+        eng.run(max_rounds=2)
+        eng.init_from_seeds(seeds)
+        stats = eng.run(max_rounds=50)
+        assert _collect_state(eng) == full[0]
+        assert _lineage_rounds(eng) == full[1]
+        assert stats.rounds == len(full[1])
+        assert stats.urls_fetched == len(full[0][2])
+
+
+def test_resume_round_honours_legacy_levels(spark, inputs, tmp_path):
+    """Lineage lines that earlier versions wrote for rounds fusing N BFS
+    levels carry ``levels``; resume continues after all N of them."""
+    pages, _, robots = inputs
+    eng = CrawlEngine(spark, str(tmp_path), pages, robots, host_budget=BUDGET)
+    (tmp_path / "lineage.jsonl").write_text(
+        '{"round": -1, "frontier_v": 1, "records_v": 1}\n'
+        '{"round": 0, "levels": 2, "frontier_v": 2, "records_v": 2}\n'
+    )
+    assert eng.resume_round() == 2
 
 
 class _Boom(RuntimeError):
@@ -95,29 +137,28 @@ def _collect_state(eng):
     return vis, fro, rec
 
 
-def test_mid_round_crash_replays_identically(spark):
+def test_mid_round_crash_replays_identically(spark, inputs, full):
     """A crash between the frontier merge, the records append, and the
     lineage commit must not double-append records or advance frontier
     state for an uncommitted round: reconcile() rolls the partial writes
     back and the replay converges to the uninterrupted run."""
-    pages, seeds, robots = load_pages(spark, n_pages=N_PAGES, n_hosts=N_HOSTS)
-    full = _final_state(spark, pages, seeds, robots, interrupt=False)
+    pages, seeds, robots = inputs
     for crash_point in ("after_records", "before_lineage"):
         with tempfile.TemporaryDirectory() as tmp:
             _crash_mid_round(spark, pages, seeds, robots, tmp, crash_point)
             fresh = CrawlEngine(spark, tmp, pages, robots, host_budget=BUDGET)
             fresh.run(max_rounds=50)
-            assert _collect_state(fresh) == full, crash_point
+            assert _collect_state(fresh) == full[0], crash_point
 
 
-def test_incremental_frontier_cache_matches_disk_resolve(spark):
+def test_incremental_frontier_cache_matches_disk_resolve(spark, inputs):
     # The engine maintains the resolved frontier incrementally
     # (broadcast state-flip + delta union) instead of re-running the
     # merge-on-read window every round; the invariant is that the
     # cached state ALWAYS equals what SnapshotTable.read() resolves
     # from disk — checked here mid-run (between compactions) and at
     # convergence (after at least one compaction refresh).
-    pages, seeds, robots = load_pages(spark, n_pages=N_PAGES, n_hosts=N_HOSTS)
+    pages, seeds, robots = inputs
     with tempfile.TemporaryDirectory() as tmp:
         eng = CrawlEngine(spark, tmp, pages, robots, host_budget=BUDGET)
         eng.frontier.compact_every = 4  # force a compaction mid-run

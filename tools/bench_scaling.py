@@ -145,7 +145,6 @@ def run_crawl(cpus: int, data_dir: str, seed_every: int | None = None) -> dict:
     workdir = tempfile.mkdtemp(prefix=f"scale{cpus}_")
     eng = CrawlEngine(
         spark, workdir, None, robots, host_budget=HOST_BUDGET, fetch_fn=fetch,
-        levels_per_commit=int(os.environ.get("SPARK_GRAFT_LEVELS", "2")),
     )
     eng.init_from_seeds(seeds)
     t0 = time.monotonic()
